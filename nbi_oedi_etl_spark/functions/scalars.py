@@ -10,6 +10,13 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
+def quote_ident(name: str) -> str:
+    """SQL identifier for a flat column NAME: wrapped in backticks, with
+    every backtick inside it doubled (Spark's escape), so any name — dots,
+    spaces, backticks — parses as exactly one column."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def dotted(name: str) -> Column:
     """Column ref for a flat column whose NAME contains dots
     (e.g. ``out.electricity.total.energy_consumption``).
@@ -19,19 +26,7 @@ def dotted(name: str) -> Column:
     backticks — unquoted dots would be mis-parsed as struct access
     (SURVEY.md §7.4.1).
     """
-    return F.col(f"`{name}`")
-
-
-def floor_to_hour(ts: Column | str) -> Column:
-    """Floor a timestamp to the hour.
-
-    Equivalent of the reference's epoch-ms integer division
-    ``ts*1000 // 3_600_000 * 3_600_000`` (transform.py:23-46) — identical to
-    ``date_trunc('hour', ts)`` for UTC sessions, but vectorized instead of
-    the reference's per-row Python loop.
-    """
-    c = F.col(ts) if isinstance(ts, str) else ts
-    return F.date_trunc("hour", c)
+    return F.col(quote_ident(name))
 
 
 def upgrade_str(code: Column | str) -> Column:

@@ -11,9 +11,12 @@ hand-built pipeline, and every stage scales by partitioning instead of
 local worker pools.
 
 Scale posture: one shuffle total (the resample's entity×hour grouping);
-the write re-clusters by partition columns to bound file counts; listing &
-pruning happen in the file index (never on the driver's own thread like the
-reference's paced lister, fetch.py:86-126).
+the write re-clusters by partition columns to bound file counts. Listing
+is NOT pruned: each read lists every file under the source root (on the
+driver below ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+paths, as a Spark job above it), unlike the reference's prefix-scoped,
+paced lister (fetch.py:60-126); partition pruning in the file index then
+skips opening and decoding the unselected partitions.
 """
 
 from __future__ import annotations
@@ -96,7 +99,9 @@ def run_etl_job(
     part_cols = [c for c in ("upgrade", "state") if c in hourly.columns]
     write_parquet(hourly, out_path, partition_by=part_cols, mode="overwrite")
 
-    out_df = spark.read.parquet(out_path)
+    # rows_out comes from the files on disk; the written frame's schema is
+    # declared so the re-read skips a schema-inference job
+    out_df = spark.read.schema(hourly.schema).parquet(out_path)
     rows_out = out_df.count()
     summary = counters.summary()
     return JobResult(

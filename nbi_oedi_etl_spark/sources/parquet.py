@@ -22,6 +22,8 @@ from collections.abc import Iterable, Mapping, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nbi_oedi_etl_spark.functions.scalars import dotted
+
 #: Tables the driver generates at /root/testdata/sf*/ (TESTDATA.md).
 TABLES = (
     "region",
@@ -37,39 +39,65 @@ TABLES = (
 )
 
 
-#: Inferred table schemas, keyed (path, fingerprint-of-files). METADATA
-#: ONLY — a StructType, never data or results: every read still scans
-#: the parquet files (this memo is what a catalog/metastore provides in
-#: a real deployment: the table schema, so scans skip footer
-#: inference). Profiled r15: inference costs ~0.08-0.1 s per
+#: Inferred table schemas, keyed by the path (plus ``basePath`` for a
+#: partitioned root) and a fingerprint of its files. METADATA ONLY — a
+#: StructType, never data or results: every read still lists and scans
+#: the parquet files (this memo is what a catalog/metastore provides in a
+#: real deployment: the table schema, so scans skip footer inference).
+#: Profiled r15: inference costs ~0.08-0.1 s (a Spark job) per
 #: ``spark.read.parquet`` call and is NOT cached by Spark within a
-#: session, so a 199-query × 3-pass bench re-inferred immutable
-#: testdata schemas ~600+ times (guide §1.2: don't compute things you
-#: throw away). The fingerprint covers the file set's (name, mtime_ns,
-#: size) — any rewrite, add, or delete rotates the key and re-infers.
+#: session, so a 199-query × 3-pass bench re-inferred immutable testdata
+#: schemas ~600+ times, and every ``read_partitioned`` request paid it
+#: again (guide §1.2: don't compute things you throw away). The
+#: fingerprint covers every file's (relative path, mtime_ns, size), at any
+#: depth — any rewrite, add, or delete rotates the key and re-infers.
 #: Session-independent by construction (pure Python StructType).
 _TABLE_SCHEMA_MEMO: dict = {}
 _TABLE_SCHEMA_MEMO_MAX = 256
 
 
 def _path_fingerprint(path: str):
-    """(name, mtime_ns, size) of the path and, for a directory-of-parts
-    table, of every visible entry — None when unstatable (caller then
-    skips the memo and lets Spark surface the original error)."""
+    """(relative path, mtime_ns, size) of ``path`` and, for a directory
+    (a directory-of-parts table or a hive-partitioned root), of every
+    visible entry beneath it at any depth — None when unstatable (a
+    non-local URI, or a missing path: the caller then skips the memo and
+    lets Spark surface the original error)."""
     import os
 
     try:
         st = os.stat(path)
         fp = [("", st.st_mtime_ns, st.st_size)]
         if os.path.isdir(path):
-            for e in sorted(os.listdir(path)):
-                if e.startswith((".", "_")):
-                    continue
-                es = os.stat(os.path.join(path, e))
-                fp.append((e, es.st_mtime_ns, es.st_size))
+            for d, dirs, files in os.walk(path, followlinks=True):
+                dirs[:] = sorted(e for e in dirs if not e.startswith((".", "_")))
+                for e in dirs + sorted(f for f in files if not f.startswith((".", "_"))):
+                    p = os.path.join(d, e)
+                    es = os.stat(p)
+                    fp.append((os.path.relpath(p, path), es.st_mtime_ns, es.st_size))
         return tuple(fp)
     except OSError:
         return None
+
+
+def _read_memoized(reader, path: str, key: tuple) -> DataFrame:
+    """``reader.parquet(path)`` with the inferred schema memoized under
+    ``key`` + the path's fingerprint (see ``_TABLE_SCHEMA_MEMO``). On a
+    hit the scan runs with the declared schema — an identical DataFrame,
+    since the declared schema IS what inference returns for the unchanged
+    files — and skips the inference job; an unstatable path is never
+    memoized."""
+    fp = _path_fingerprint(path)
+    if fp is None:
+        return reader.parquet(path)
+    key = (*key, fp)
+    schema = _TABLE_SCHEMA_MEMO.get(key)
+    if schema is not None:
+        return reader.schema(schema).parquet(path)
+    df = reader.parquet(path)
+    _TABLE_SCHEMA_MEMO[key] = df.schema
+    while len(_TABLE_SCHEMA_MEMO) > _TABLE_SCHEMA_MEMO_MAX:
+        _TABLE_SCHEMA_MEMO.pop(next(iter(_TABLE_SCHEMA_MEMO)))
+    return df
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -92,16 +120,10 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # schema read of the nanos column
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/{name}.parquet"
-    fp = _path_fingerprint(path)
-    schema = _TABLE_SCHEMA_MEMO.get((path, fp)) if fp is not None else None
-    if schema is not None:
-        raw = spark.read.schema(schema).parquet(path)
-    else:
-        raw = spark.read.parquet(path)
-        if fp is not None:
-            _TABLE_SCHEMA_MEMO[(path, fp)] = raw.schema
-            while len(_TABLE_SCHEMA_MEMO) > _TABLE_SCHEMA_MEMO_MAX:
-                _TABLE_SCHEMA_MEMO.pop(next(iter(_TABLE_SCHEMA_MEMO)))
+    # key (path, fp): a different length from read_partitioned's keys, so
+    # the two readers never share an entry (this one's events inference
+    # depends on the nanosAsLong conf set above)
+    raw = _read_memoized(spark.read, path, (path,))
     if name == "events":
         if dict(raw.dtypes).get("ts") == "bigint":
             raw = raw.withColumn(
@@ -136,11 +158,17 @@ def read_partitioned(
 ) -> DataFrame:
     """Scan a hive-partitioned parquet root with partition pruning.
 
-    Mirrors the reference's partition-selective listing
-    (fetch.py:60-82: only configured ``upgrade=<n>/state=<XX>`` prefixes are
-    ever listed) — here the same pruning happens inside Catalyst's
-    PartitioningAwareFileIndex, so unselected partitions are never listed,
-    opened, or decoded.
+    The reference lists only the configured ``upgrade=<n>/state=<XX>``
+    prefixes (fetch.py:60-82). Here ``spark.read.parquet(root)`` lists
+    EVERY file under the root on each call (Spark's in-memory file index);
+    the partition filter is then pruned inside Catalyst's
+    PartitioningAwareFileIndex, so unselected partitions are listed but
+    never opened or decoded.
+
+    The inferred schema is memoized per (root, ``base_path``, recursive
+    file fingerprint) in ``_TABLE_SCHEMA_MEMO``, so a repeated read of an
+    unchanged local root skips the schema-inference Spark job; listing and
+    scanning still happen at every call.
 
     ``partition_filters`` maps partition column → value or list of values
     (e.g. ``{"state": "AK", "upgrade": [0, 1]}``).
@@ -148,11 +176,11 @@ def read_partitioned(
     reader = spark.read
     if base_path:
         reader = reader.option("basePath", base_path)
-    df = reader.parquet(root)
+    df = _read_memoized(reader, root, (root, base_path))
     if partition_filters:
         pred: Column | None = None
         for col_name, val in partition_filters.items():
-            c = F.col(f"`{col_name}`")
+            c = dotted(col_name)
             clause = (
                 c.isin(list(val))
                 if isinstance(val, (list, tuple, set))
@@ -161,5 +189,5 @@ def read_partitioned(
             pred = clause if pred is None else (pred & clause)
         df = df.where(pred)
     if columns:
-        df = df.select(*[F.col(f"`{c}`") for c in columns])
+        df = df.select(*[dotted(c) for c in columns])
     return df

@@ -28,6 +28,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from nbi_oedi_etl_spark.functions.scalars import quote_ident
+from nbi_oedi_etl_spark.operators.resample import aggregate_items, aggregate_sql
+
 
 def scoped_streaming_session(
     spark: SparkSession, shuffle_partitions: int = 8
@@ -177,23 +180,18 @@ def streaming_hourly_resample(
 ) -> DataFrame:
     """A1 as a tumbling-window streaming aggregation with late-data handling.
 
-    Same ``_min``/``_mean`` naming as the batch resample; the hour bucket is
+    Same ``_min``/``_mean`` naming as the batch resample — rendered by the
+    same ``aggregate_items``, as one SQL aggregate; the hour bucket is
     ``window(ts, '1 hour').start``. Late rows within ``watermark`` update
     their window; older rows are dropped (reference precedent: none — data
     was historical; SURVEY.md §7.4.8 says this policy is ours to define)."""
-    withw = stream.withWatermark(ts_col, watermark)
-    aggs = []
-    for c in min_cols:
-        aggs.append(F.min(F.col(f"`{c}`")).alias(f"{c}_min"))
-    for c in mean_cols:
-        m = F.avg(F.col(f"`{c}`"))
-        if round_means is not None:
-            m = F.round(m, round_means)
-        aggs.append(m.alias(f"{c}_mean"))
-    out = withw.groupBy(
-        *[F.col(f"`{c}`") for c in entity_cols],
-        F.window(F.col(ts_col), "1 hour").alias("hour_window"),
-    ).agg(*aggs)
+    keys = [quote_ident(c) for c in entity_cols]
+    window = f"window({quote_ident(ts_col)}, '1 hour')"
+    out = aggregate_sql(
+        stream.withWatermark(ts_col, watermark),
+        keys + [f"{window} AS hour_window"] + aggregate_items(min_cols, mean_cols, round_means),
+        keys + [window],
+    )
     return out.withColumn("ts_hour", F.col("hour_window.start")).drop("hour_window")
 
 

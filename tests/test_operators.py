@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from nbi_oedi_etl_spark.functions.scalars import upgrade_str
+from nbi_oedi_etl_spark.functions.scalars import dotted, quote_ident, upgrade_str
 from nbi_oedi_etl_spark.monitor import StageCounters
 from nbi_oedi_etl_spark.operators import asof, dedup, multimodal, reconcile
 from nbi_oedi_etl_spark.operators.resample import REFERENCE_MEASURE_COLUMNS, resample_hourly
@@ -80,6 +80,58 @@ def test_resample_does_not_merge_entities(spark):
     assert out.count() == 2
     vals = {r["bldg_id"]: r["m_mean"] for r in out.collect()}
     assert vals == {1: 10.0, 2: 30.0}
+
+
+def test_resample_quotes_awkward_names_matches_pandas(spark):
+    """Identifier quoting in the one-SQL-string aggregate: a dotted measure
+    whose name holds a backtick and braces (braces are format-string syntax
+    for ``spark.sql``'s ``{src}`` binding), a measure with nulls (the mean
+    skips them), ``round_means`` and ``hour_col`` — checked against an
+    independent pandas recomputation."""
+    import pandas as pd
+
+    odd = "out.we`ird.{site}_energy}"
+    pdf = pd.DataFrame(
+        {
+            "ts": pd.to_datetime(
+                ["2024-01-01 00:05", "2024-01-01 00:50", "2024-01-01 01:10",
+                 "2024-01-01 00:20", "2024-01-01 01:45", "2024-01-01 01:59"]
+            ).astype("datetime64[us]"),
+            "bldg_id": [1, 1, 1, 2, 2, 2],
+            odd: [1.0, 2.0, 4.0, 0.1, 0.2, 0.4],
+            "gappy": [None, 3.0, None, 1.0, 2.0, 5.0],
+        }
+    )
+    out = resample_hourly(
+        spark.createDataFrame(pdf), ts_col="ts", entity_cols=("bldg_id",),
+        min_cols=("bldg_id", "ts"), mean_cols=(odd, "gappy"), hour_col="hr",
+        round_means=3,
+    )
+    assert out.columns == [
+        "bldg_id_min", "ts_min", f"{odd}_mean", "gappy_mean", "bldg_id", "hr",
+    ]
+    g = pdf.assign(hr=pdf["ts"].dt.floor("h")).groupby(["bldg_id", "hr"])
+    want = {
+        (b, hr.to_pydatetime()): (
+            grp["bldg_id"].min(), grp["ts"].min().to_pydatetime(),
+            round(grp[odd].mean(), 3),
+            None if grp["gappy"].isna().all() else round(grp["gappy"].mean(), 3),
+        )
+        for (b, hr), grp in g
+    }
+    got = {(r["bldg_id"], r["hr"]): tuple(r)[:4] for r in out.collect()}
+    assert got == want
+    # the hour with only a null ``gappy`` sample has a null mean
+    assert got[(1, dt.datetime(2024, 1, 1, 1))][3] is None
+
+
+def test_dotted_and_quote_ident_escape_backticks(spark):
+    """``quote_ident`` doubles an embedded backtick, so ``dotted`` resolves
+    a name containing one instead of building an unparseable reference."""
+    assert quote_ident("a.b") == "`a.b`"
+    assert quote_ident("a`b") == "`a``b`"
+    df = spark.createDataFrame([(1, 2)], ["x.y`z", "w"])
+    assert df.select(dotted("x.y`z")).first()[0] == 1
 
 
 # ------------------------------------------------------------------ scalars

@@ -81,8 +81,9 @@ def test_pipeline_end_to_end(spark, ts_fixture, tmp_path):
 
 
 def test_pipeline_prunes_partitions(spark, ts_fixture):
-    """The partition filter must reach the file index — upgrade=1/state=CA
-    files are never listed in the scan."""
+    """The partition filter must reach the file index — the upgrade=1 and
+    state=CA files are listed (``spark.read.parquet(root)`` lists every
+    file under the root) but pruned before any is opened or decoded."""
     from nbi_oedi_etl_spark.sources.parquet import read_partitioned
 
     from nbi_oedi_etl_spark.plans import partition_filters
